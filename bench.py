@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -159,7 +160,8 @@ def main():
                 timings[name] = min(timings[name], dt)
 
     total = round(sum(timings.values()), 3)
-    sf = 0.1 if "sf0.1" in sf_dir else (0.01 if "sf0.01" in sf_dir else 0.001)
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
     # hypervisor steal over the measured window (multi-minute bursts observed
     # on this sandbox — identical suites have measured 42s vs 80s wall); a
     # high value means the weather, not the plans, set the numbers

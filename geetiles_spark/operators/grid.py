@@ -19,8 +19,11 @@ Spark design: ``spark.range(gridx*gridy)`` → ``mapInPandas`` running the
 vectorized numpy kernel per Arrow batch (projection, probes, AOI filter,
 hashing) → a second cheap pass adds ``area_km2`` once the collection-envelope
 UTM zone is known (global agg).  No shuffle anywhere; the only global barrier
-is the 4-number bounds aggregate.  At 10^12 scale the range source partitions
-evenly and AQE needs nothing to do; the AOI ring is a task-closure broadcast.
+is the 4-number bounds aggregate.  The range gets one partition per
+``partitioning.ROWS_PER_TASK`` cells, at most one per core
+(``partitions_for_rows``), and every downstream Python stage over the tiles
+inherits that count.  At 10^12 scale the range source partitions evenly and
+AQE needs nothing to do; the AOI ring is a task-closure broadcast.
 
 Row order parity: the reference enumerates ``itertools.product(range(gridx),
 range(gridy))`` and filters — ``row_idx`` preserves that order so the
@@ -39,6 +42,7 @@ from pyspark.sql import types as T
 
 from .. import cache
 from ..geo import geom, hashing, utm
+from .partitioning import partitions_for_rows
 
 TILE_SCHEMA = T.StructType(
     [
@@ -150,7 +154,7 @@ def make_grid(
                 }
             )
 
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
+    num_partitions = num_partitions or partitions_for_rows(spark, total)
     base = spark.range(0, total, 1, num_partitions)
     tiles = base.mapInPandas(gen, TILE_SCHEMA)
     # persist before the bounds agg so generation runs once, not once per
@@ -310,6 +314,6 @@ def make_grid_clipped(
                 }
             )
 
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
+    num_partitions = num_partitions or partitions_for_rows(spark, total)
     base = spark.range(0, total, 1, num_partitions)
     return base.mapInPandas(gen, schema)

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from ..geo import geom, hashing, utm
 from .grid import TILE_SCHEMA, polygon_centroid
+from .partitioning import partitions_for_rows
 
 
 def katana(
@@ -189,7 +190,9 @@ def make_random_partitions_hashed(
     schema = T.StructType(
         TILE_SCHEMA.fields + [T.StructField("area_km2", T.DoubleType())]
     )
-    return spark.createDataFrame(pd.DataFrame(rows), schema=schema)
+    return spark.createDataFrame(pd.DataFrame(rows), schema=schema).coalesce(
+        partitions_for_rows(spark, len(rows))
+    )
 
 
 def make_random_partitions(
@@ -210,7 +213,10 @@ def make_random_partitions(
     schema = T.StructType(
         TILE_SCHEMA.fields + [T.StructField("area_km2", T.DoubleType())]
     )
-    return spark.createDataFrame(pdf, schema=schema)
+    # coalesce concatenates partitions in order: row order is kept
+    return spark.createDataFrame(pdf, schema=schema).coalesce(
+        partitions_for_rows(spark, len(pdf))
+    )
 
 
 def aoi_rng(seed: int, aoi_id) -> np.random.Generator:
