@@ -88,8 +88,7 @@ def ring_cells(cid: int, ring: int) -> np.ndarray:
     ``cid`` (ring 0 = the cell itself).  Used for kNN ring expansion."""
     level = int(cid >> 58)
     nmax = (1 << level) - 1
-    ix = (cid >> 29) & ((1 << 29) - 1)
-    iy = cid & ((1 << 29) - 1)
+    ix, iy = cell_ixiy(cid)
     if ring == 0:
         return np.array([cid], dtype=np.int64)
     xs = []

@@ -87,10 +87,6 @@ def utm_epsg(lon: float, lat: float) -> int:
     return (32600 if lat >= 0 else 32700) + z
 
 
-def zone_central_meridian(zone: np.ndarray) -> np.ndarray:
-    return np.asarray(zone, dtype=np.float64) * 6.0 - 183.0
-
-
 def lonlat_to_utm(
     lon: np.ndarray, lat: np.ndarray, zone: int, south: bool = False
 ) -> tuple[np.ndarray, np.ndarray]:

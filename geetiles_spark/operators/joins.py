@@ -28,8 +28,9 @@ against each other and the pandas oracle):
   *report-once* rule (keep the pair only in the cell containing the
   top-left corner of the bbox intersection) — a pure column filter, no
   ``distinct`` shuffle.  The exact refine batches the vectorized clip per
-  foreign geometry.  With a huge foreign side, drop the broadcast hint and
-  AQE handles the shuffle join + skew.
+  foreign geometry.  The foreign cells are always broadcast; the
+  point-in-polygon and interval joins, whose polygon or event side can
+  outgrow a broadcast, have a ``shuffle_hash`` cell path as well.
 
 Degenerate-touch semantics: pairs whose intersection has zero area
 (boundary touch) carry weight 0 in the reference too; they can only matter
@@ -40,6 +41,7 @@ broadcast path reproduces the reference exactly via a SAT fallback).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -50,7 +52,8 @@ from pyspark.sql import types as T
 
 from .. import cache
 from ..geo import cells, geom, s2
-from .partitioning import spread
+
+log = logging.getLogger(__name__)
 
 # --------------------------------------------------------------------------
 # foreign-set representation
@@ -258,44 +261,27 @@ def _explode_cells(df: DataFrame, level: int, extra_cols: list[str]) -> DataFram
     return df.mapInPandas(run, schema)
 
 
-def _ref_cell_clamped(ref_x, ref_y, level: int, size: float):
-    """Report-once reference cell for a bbox-intersection corner, with the
-    SAME [0, 2^level - 1] index clamp ``cells.cell_id``/``cover_bbox``
-    apply (ADVICE r6: an unclamped corner at/past +180 lon or +90 lat put
-    the reference cell outside both sides' exploded covers, silently
-    dropping the overlapping pair)."""
-    nmax = (1 << level) - 1
-    ref_ix = F.least(
-        F.greatest(F.floor((ref_x + F.lit(180.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    ref_iy = F.least(
-        F.greatest(F.floor((ref_y + F.lit(90.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    return (
-        F.lit(level).cast("long") * F.lit(1 << 58).cast("long")
-        + ref_ix * F.lit(1 << 29).cast("long")
-        + ref_iy
-    )
-
-
-def point_cell_expr(lon_col: str, lat_col: str, level: int):
+def point_cell_expr(lon, lat, level: int):
     """JVM column-expression twin of :func:`..geo.cells.cell_id` — identical
     int64 ids for finite inputs, but whole-stage-codegen instead of an
     ``ArrowEvalPython`` round-trip per point (optimization guide §4.1:
     prefer built-ins; the pandas-UDF version serialized every point's
-    lon/lat out to Python and a long back per row)."""
+    lon/lat out to Python and a long back per row).  ``lon``/``lat`` are
+    column names or Columns; the box joins use it for the report-once
+    reference cell, whose index clamp must match ``cover_bbox`` (ADVICE r6:
+    an unclamped corner at/past +180 lon or +90 lat put the reference cell
+    outside both sides' exploded covers, silently dropping the pair)."""
     size = cells.cell_size_deg(level)
     nmax = (1 << level) - 1
-    ix = F.least(
-        F.greatest(F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
+
+    def index(c, offset: float):
+        c = F.col(c) if isinstance(c, str) else c
+        return F.least(
+            F.greatest(F.floor((c + F.lit(offset)) / F.lit(size)), F.lit(0)),
+            F.lit(nmax),
+        ).cast("long")
+
+    ix, iy = index(lon, 180.0), index(lat, 90.0)
     return F.lit(level << 58).bitwiseOR(F.shiftleft(ix, 29)).bitwiseOR(iy)
 
 
@@ -317,109 +303,135 @@ def choose_level(foreign: DataFrame) -> int:
         F.expr("percentile_approx(maxx - minx, 0.5)").alias("w")
     ).collect()[0]
     width = max(float(r["w"] or 0.01), 1e-6)
-    return cells.level_for_size(width)
+    level = cells.level_for_size(width)
+    log.debug("choose_level: median foreign width %.6g deg -> level %d", width, level)
+    return level
 
 
-def spatial_pairs_cell_join(
-    tiles: DataFrame,
-    foreign: DataFrame,
-    level: int | None = None,
-    broadcast_foreign: bool = True,
+_BOX = ["minx", "miny", "maxx", "maxy"]
+_T_BOX = [f"t_{c}" for c in _BOX]  # the tile bbox after _box_cell_pairs
+
+
+def _box_cell_pairs(
+    tiles: DataFrame, other: DataFrame, level: int, key: str, prefix: str, hint: str
 ) -> DataFrame:
-    """Candidate (tile, foreign) pairs + exact refine via the cell equi-join.
+    """Candidate (tile, other) pairs whose bboxes overlap, each exactly once.
 
-    Output: (tile_id, foreign_idx, foreign_id, inter_area) for overlapping
-    pairs (inter_area > 0).  The tile side carries its bounds through the
-    explode so no post-join geometry lookup is needed; duplicates are cut by
-    the report-once rule (pure filter).  Tile geometries are treated as
-    their bounding boxes (exact for grid tiles).
+    ``other`` has columns (key, minx, miny, maxx, maxy, *carried).  Both
+    sides explode to their covering cells at ``level`` and equi-join on
+    ``cell`` with ``hint`` on the ``other`` side; the carried columns ride
+    through the join.  Duplicates from multi-cell overlap are cut by the
+    report-once rule: a pair survives only in the cell containing the
+    lower-left corner of its bbox intersection — a pure filter, no
+    ``distinct`` and no pair-keyed aggregate.  Output: tile_id, cell,
+    t_minx..t_maxy, ``key``, ``prefix``minx..maxy, *carried.
     """
-    level = level or choose_level(foreign)
-    size = cells.cell_size_deg(level)
-
+    carried = other.columns[5:]
     tcells = _explode_cells(
-        tiles.select(
-            F.col("tile_id").alias("key"), "minx", "miny", "maxx", "maxy"
-        ),
-        level,
-        ["minx", "miny", "maxx", "maxy"],
+        tiles.select(F.col("tile_id").alias("key"), *_BOX), level, _BOX
     ).select(
         F.col("key").alias("tile_id"), "cell",
-        F.col("minx").alias("t_minx"), F.col("miny").alias("t_miny"),
-        F.col("maxx").alias("t_maxx"), F.col("maxy").alias("t_maxy"),
+        *[F.col(c).alias(t) for c, t in zip(_BOX, _T_BOX)],
     )
-    fcells = _explode_cells(
-        foreign.select(
-            F.col("tile_id").alias("key"), "minx", "miny", "maxx", "maxy",
-            F.col("row_idx").alias("foreign_idx"),
-            F.col("geometry_wkb").alias("foreign_wkb"),
-        ),
-        level,
-        ["minx", "miny", "maxx", "maxy", "foreign_idx", "foreign_wkb"],
-    ).select(
-        F.col("key").alias("foreign_id"), "cell",
-        F.col("minx").alias("f_minx"), F.col("miny").alias("f_miny"),
-        F.col("maxx").alias("f_maxx"), F.col("maxy").alias("f_maxy"),
-        "foreign_idx", "foreign_wkb",
+    ocells = _explode_cells(other, level, _BOX + carried).select(
+        F.col("key").alias(key), "cell",
+        *[F.col(c).alias(prefix + c) for c in _BOX], *carried,
     )
-    if broadcast_foreign:
-        fcells = F.broadcast(fcells)
-
-    joined = tcells.join(fcells, "cell")
-
-    # bbox overlap + report-once: keep the pair only in the cell that
-    # contains the (max(minx), max(miny)) corner of the bbox intersection
-    ref_cell = _ref_cell_clamped(
-        F.greatest("t_minx", "f_minx"), F.greatest("t_miny", "f_miny"),
-        level, size,
+    t, o = (lambda c: F.col(f"t_{c}")), (lambda c: F.col(prefix + c))
+    ref_cell = point_cell_expr(
+        F.greatest(t("minx"), o("minx")), F.greatest(t("miny"), o("miny")), level
     )
-    pairs = joined.filter(
-        (F.col("t_minx") <= F.col("f_maxx"))
-        & (F.col("t_maxx") >= F.col("f_minx"))
-        & (F.col("t_miny") <= F.col("f_maxy"))
-        & (F.col("t_maxy") >= F.col("f_miny"))
+    return tcells.join(ocells.hint(hint), "cell").filter(
+        (t("minx") <= o("maxx"))
+        & (t("maxx") >= o("minx"))
+        & (t("miny") <= o("maxy"))
+        & (t("maxy") >= o("miny"))
         & (F.col("cell") == ref_cell)
-    ).select(
-        "tile_id", "t_minx", "t_miny", "t_maxx", "t_maxy",
-        "foreign_id", "foreign_idx", "foreign_wkb",
     )
+
+
+def _ring_refine(
+    key: str,
+    coords: list[str],
+    kernel,
+    out_cols: list[str],
+    rings=None,
+    wkb_col: str | None = None,
+    value_col: str | None = None,
+):
+    """The exact refine of the cell, point-in-polygon and interval joins, as
+    a ``mapInPandas`` function.
+
+    Per Arrow batch, rows group by ``key``; a key's ring comes from the
+    broadcast dict ``rings`` or is decoded once per task from the WKB column
+    ``wkb_col`` carried through the join.  ``kernel(*coords, ring)`` gets
+    the group's ``coords`` columns and returns a mask or intersection areas;
+    rows with a positive value keep ``out_cols`` (plus the value as
+    ``value_col``).  A key with no ring (null footprint) keeps its rows: its
+    bbox test was exact.  An area refine rejects a null ring instead.  The
+    function is named ``refine`` because plans, and the per-node counters
+    read from them, show it as ``MapInPandas refine(...)``.
+    """
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ring_cache: dict[str, np.ndarray] = {}
+        rr = {} if rings is None else rings.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            n = len(pdf)
-            areas = np.zeros(n, dtype=np.float64)
-            bx0 = pdf["t_minx"].to_numpy()
-            by0 = pdf["t_miny"].to_numpy()
-            bx1 = pdf["t_maxx"].to_numpy()
-            by1 = pdf["t_maxy"].to_numpy()
-            for fid, idx in pdf.groupby("foreign_id").indices.items():
-                ring = ring_cache.get(fid)
-                if ring is None:
-                    ring = geom.wkb_to_polygon(bytes(pdf["foreign_wkb"].iloc[idx[0]]))
-                    ring_cache[fid] = ring
-                areas[idx] = geom.clip_areas_ring_boxes_exact(
-                    ring, bx0[idx], by0[idx], bx1[idx], by1[idx]
-                )
-            keep = areas > 0
-            out = pdf.loc[keep, ["tile_id", "foreign_idx", "foreign_id"]].copy()
-            out["inter_area"] = areas[keep]
-            yield out
+            cols = [pdf[c].to_numpy() for c in coords]
+            vals = np.ones(len(pdf), dtype=np.float64)
+            for k, idx in pdf.groupby(key).indices.items():
+                if wkb_col is not None and k not in rr:
+                    wkb = pdf[wkb_col].iloc[idx[0]]
+                    rr[k] = None if wkb is None else geom.wkb_to_polygon(bytes(wkb))
+                ring = rr.get(k)
+                if ring is not None:
+                    vals[idx] = kernel(*(c[idx] for c in cols), ring)
+                elif value_col is not None:  # a null ring has no area
+                    raise ValueError(f"{key} {k!r} has a null geometry")
+            keep = vals > 0
+            out = pdf.loc[keep, out_cols]
+            yield out if value_col is None else out.assign(**{value_col: vals[keep]})
 
+    return refine
+
+
+def _overlap_pairs(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
+    """Candidate (tile, foreign) pairs + exact refine via the broadcast cell
+    equi-join.
+
+    Output: (tile_id, foreign_idx, foreign_id, inter_area) for overlapping
+    pairs (inter_area > 0).  The tile side carries its bounds through the
+    explode so no post-join geometry lookup is needed.  Tile geometries are
+    treated as their bounding boxes (exact for grid tiles).
+    """
+    pairs = _box_cell_pairs(
+        tiles,
+        foreign.select(
+            F.col("tile_id").alias("key"), *_BOX,
+            F.col("row_idx").alias("foreign_idx"),
+            F.col("geometry_wkb").alias("foreign_wkb"),
+        ),
+        choose_level(foreign), "foreign_id", "f_", "broadcast",
+    ).select("tile_id", *_T_BOX, "foreign_id", "foreign_idx", "foreign_wkb")
+
+    def areas(minx, miny, maxx, maxy, ring):
+        return geom.clip_areas_ring_boxes_exact(ring, minx, miny, maxx, maxy)
+
+    refine = _ring_refine(
+        "foreign_id", _T_BOX, areas, ["tile_id", "foreign_idx", "foreign_id"],
+        wkb_col="foreign_wkb", value_col="inter_area",
+    )
     return pairs.mapInPandas(refine, _PAIR_REFINE_SCHEMA)
 
 
-def intersect_join_cells(
-    tiles: DataFrame, foreign: DataFrame, level: int | None = None
-) -> DataFrame:
+def intersect_join_cells(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
     """J1 via cell join: argmax area, first-max in foreign row order, '-1'
     for tiles with no overlapping foreign."""
     # persist: the pair set feeds both the argmax agg and the left join
     # back to tiles — without it the whole explode+refine chain re-executes
     # per consumer (production equivalent: checkpoint pairs to a table)
-    pairs = cache.track(spatial_pairs_cell_join(tiles, foreign, level))
+    pairs = cache.track(_overlap_pairs(tiles, foreign))
     best = _argmax_foreign(pairs)
     return (
         tiles.select("tile_id")
@@ -446,13 +458,11 @@ def _argmax_foreign(pairs: DataFrame) -> DataFrame:
     ).select("tile_id", F.col("best.foreign_id").alias("foreign_id"))
 
 
-def foreign_proportions_cells(
-    tiles: DataFrame, foreign: DataFrame, level: int | None = None
-) -> DataFrame:
+def foreign_proportions_cells(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
     """J2 via cell join: explode props, weight by inter_area / Σ, re-aggregate
     to a map.  Argmax id as in J1."""
     # persist: consumed by the weight window, the explode-agg and the argmax
-    pairs = cache.track(spatial_pairs_cell_join(tiles, foreign, level))
+    pairs = cache.track(_overlap_pairs(tiles, foreign))
     fprops = foreign.select(F.col("tile_id").alias("foreign_id"), "props")
     with_props = pairs.join(F.broadcast(fprops), "foreign_id")
 
@@ -562,47 +572,28 @@ def point_in_polygon_join(
             T.StructField("tile_id", T.StringType()),
         ]
     )
+    out_cols = ["point_id", "lon", "lat", "tile_id"]
+
+    def inside(lon, lat, ring):
+        return geom.points_in_polygon(np.stack([lon, lat], axis=1), ring)
+
+    refine_args = ("tile_id", ["lon", "lat"], inside, out_cols)
 
     if not broadcast_polys:
         gcells = _explode_cells(
-            polys.select(
-                F.col("tile_id").alias("key"),
-                "minx", "miny", "maxx", "maxy", "geometry_wkb",
-            ),
+            polys.select(F.col("tile_id").alias("key"), *_BOX, "geometry_wkb"),
             level,
             ["geometry_wkb"],
-        ).select(
-            F.col("key").alias("tile_id"), "cell", "geometry_wkb"
-        )
+        ).select(F.col("key").alias("tile_id"), "cell", "geometry_wkb")
         cand = pcells.join(gcells.hint("shuffle_hash"), "cell").select(
             "point_id", "lon", "lat", "tile_id", "geometry_wkb"
         )
-
-        def refine_carried(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ring_cache: dict[str, np.ndarray] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                pts = np.stack(
-                    [pdf["lon"].to_numpy(), pdf["lat"].to_numpy()], axis=1
-                )
-                for tid, idx in pdf.groupby("tile_id").indices.items():
-                    ring = ring_cache.get(tid)
-                    if ring is None:
-                        ring = geom.wkb_to_polygon(
-                            bytes(pdf["geometry_wkb"].iloc[idx[0]])
-                        )
-                        ring_cache[tid] = ring
-                    keep[idx] = geom.points_in_polygon(pts[idx], ring)
-                yield pdf.loc[keep, ["point_id", "lon", "lat", "tile_id"]]
-
-        return cand.mapInPandas(refine_carried, schema)
+        return cand.mapInPandas(
+            _ring_refine(*refine_args, wkb_col="geometry_wkb"), schema
+        )
 
     gcells = _explode_cells(
-        polys.select(F.col("tile_id").alias("key"), "minx", "miny", "maxx", "maxy"),
-        level,
-        ["minx", "miny", "maxx", "maxy"],
+        polys.select(F.col("tile_id").alias("key"), *_BOX), level, _BOX
     ).withColumnRenamed("key", "tile_id")
 
     cand = pcells.join(F.broadcast(gcells), "cell")
@@ -629,7 +620,7 @@ def point_in_polygon_join(
         return cand.filter(
             (F.col("lon") > F.col("minx")) & (F.col("lon") < F.col("maxx"))
             & (F.col("lat") > F.col("miny")) & (F.col("lat") < F.col("maxy"))
-        ).select("point_id", "lon", "lat", "tile_id")
+        ).select(*out_cols)
 
     # generic rings: closed-bbox prefilter in codegen (a superset of the
     # even-odd interior, so it never drops a point the refine would keep)
@@ -637,21 +628,9 @@ def point_in_polygon_join(
     cand = cand.filter(
         (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
         & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
-    ).select("point_id", "lon", "lat", "tile_id")
+    ).select(*out_cols)
     b = spark.sparkContext.broadcast(rings)
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            pts = np.stack([pdf["lon"].to_numpy(), pdf["lat"].to_numpy()], axis=1)
-            for tid, idx in pdf.groupby("tile_id").indices.items():
-                keep[idx] = geom.points_in_polygon(pts[idx], rr[tid])
-            yield pdf[keep][["point_id", "lon", "lat", "tile_id"]]
-
-    return cand.mapInPandas(refine, schema)
+    return cand.mapInPandas(_ring_refine(*refine_args, rings=b), schema)
 
 
 # --------------------------------------------------------------------------
@@ -691,7 +670,7 @@ def interval_spatial_join(
       contract, the reference's is ~thousands).  Wins when events are few:
       tiles never shuffle at all.
     * ``broadcast_events=False`` (the scale path, VERDICT r5 next #2 —
-      the ``pip_join``/``spatial_pairs_cell_join`` pattern): both sides
+      the ``pip_join``/``intersect_join_cells`` pattern): both sides
       explode to covering cells, a ``shuffle_hash`` equi-join on the cell
       id produces candidates with the event ring CARRIED THROUGH the join,
       duplicates are cut by the report-once rule (keep the pair only in
@@ -702,27 +681,20 @@ def interval_spatial_join(
       the cost is one shuffle of each side on its cell ids.  Wins when
       the in-window catalog outgrows broadcast budgets.
     """
-    has_geom = "geometry_wkb" in events.columns
+    in_window = (F.col("start") >= F.lit(start_lit)) & (F.col("end") <= F.lit(end_lit))
     if not broadcast_events:
-        return _interval_spatial_join_cells(
-            tiles, events, start_lit, end_lit, has_geom, level
-        )
-    cols = [
-        F.col("event_id"),
-        F.col("minx").alias("e_minx"), F.col("miny").alias("e_miny"),
-        F.col("maxx").alias("e_maxx"), F.col("maxy").alias("e_maxy"),
-    ]
-    e = events.filter(
-        (F.col("start") >= F.lit(start_lit)) & (F.col("end") <= F.lit(end_lit))
-    ).select(*cols)
-    t = tiles.select("tile_id", "minx", "miny", "maxx", "maxy")
+        return _interval_spatial_join_cells(tiles, events.filter(in_window), level)
+    e = events.filter(in_window).select(
+        "event_id", *[F.col(c).alias(f"e_{c}") for c in _BOX]
+    )
+    t = tiles.select("tile_id", *_BOX)
     cand = t.join(
         F.broadcast(e),
         (F.col("minx") <= F.col("e_maxx")) & (F.col("maxx") >= F.col("e_minx"))
         & (F.col("miny") <= F.col("e_maxy")) & (F.col("maxy") >= F.col("e_miny")),
         "inner",
     )
-    if not has_geom:
+    if "geometry_wkb" not in events.columns:
         return cand.select("tile_id", "event_id")
 
     # collect only in-window geometries (ADVICE r2: out-of-window rings were
@@ -730,11 +702,7 @@ def interval_spatial_join(
     # in a mixed flood catalog) refines by bbox only instead of raising
     rings = {
         r["event_id"]: geom.wkb_to_polygon(bytes(r["geometry_wkb"]))
-        for r in events.filter(
-            (F.col("start") >= F.lit(start_lit))
-            & (F.col("end") <= F.lit(end_lit))
-            & F.col("geometry_wkb").isNotNull()
-        )
+        for r in events.filter(in_window & F.col("geometry_wkb").isNotNull())
         .select("event_id", "geometry_wkb")
         .collect()
     }
@@ -746,127 +714,34 @@ def interval_spatial_join(
             T.StructField("event_id", events.schema["event_id"].dataType),
         ]
     )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            bx0 = pdf["minx"].to_numpy()
-            by0 = pdf["miny"].to_numpy()
-            bx1 = pdf["maxx"].to_numpy()
-            by1 = pdf["maxy"].to_numpy()
-            for eid, idx in pdf.groupby("event_id").indices.items():
-                ring = rr.get(eid)
-                if ring is None:  # null footprint: bbox prefilter is exact
-                    keep[idx] = True
-                else:
-                    keep[idx] = geom.boxes_intersect_polygon(
-                        bx0[idx], by0[idx], bx1[idx], by1[idx], ring
-                    )
-            yield pdf.loc[keep, ["tile_id", "event_id"]]
-
-    return cand.select(
-        "tile_id", "event_id", "minx", "miny", "maxx", "maxy"
-    ).mapInPandas(refine, schema)
+    refine = _ring_refine(
+        "event_id", _BOX, geom.boxes_intersect_polygon, ["tile_id", "event_id"],
+        rings=b,
+    )
+    return cand.select("tile_id", "event_id", *_BOX).mapInPandas(refine, schema)
 
 
 def _interval_spatial_join_cells(
-    tiles: DataFrame,
-    events: DataFrame,
-    start_lit: str,
-    end_lit: str,
-    has_geom: bool,
-    level: int | None = None,
+    tiles: DataFrame, e: DataFrame, level: int | None
 ) -> DataFrame:
     """Cell-shuffle twin of :func:`interval_spatial_join` (no driver
-    collect, no broadcast of the event relation): the interval predicate
-    pushes into the event scan, both sides cell-decompose, and the ring
-    refine consumes ``geometry_wkb`` carried through the equi-join."""
-    e = events.filter(
-        (F.col("start") >= F.lit(start_lit)) & (F.col("end") <= F.lit(end_lit))
-    )
-    if not has_geom:
+    collect, no broadcast of the event relation) over the in-window events
+    ``e``: the interval predicate pushes into the event scan, both sides
+    cell-decompose, and the ring refine consumes ``geometry_wkb`` carried
+    through the equi-join."""
+    if "geometry_wkb" not in e.columns:
         e = e.withColumn("geometry_wkb", F.lit(None).cast("binary"))
-    level = level or choose_level(e)
-    size = cells.cell_size_deg(level)
-
-    tcells = _explode_cells(
-        tiles.select(
-            F.col("tile_id").alias("key"), "minx", "miny", "maxx", "maxy"
-        ),
-        level,
-        ["minx", "miny", "maxx", "maxy"],
-    ).select(
-        F.col("key").alias("tile_id"), "cell",
-        F.col("minx").alias("t_minx"), F.col("miny").alias("t_miny"),
-        F.col("maxx").alias("t_maxx"), F.col("maxy").alias("t_maxy"),
+    cand = _box_cell_pairs(
+        tiles,
+        e.select(F.col("event_id").cast("string").alias("key"), *_BOX, "geometry_wkb"),
+        level or choose_level(e), "event_id", "e_", "shuffle_hash",
     )
-    ecells = _explode_cells(
-        e.select(
-            F.col("event_id").cast("string").alias("key"),
-            "minx", "miny", "maxx", "maxy", "geometry_wkb",
-        ),
-        level,
-        ["minx", "miny", "maxx", "maxy", "geometry_wkb"],
-    ).select(
-        F.col("key").alias("event_id"), "cell",
-        F.col("minx").alias("e_minx"), F.col("miny").alias("e_miny"),
-        F.col("maxx").alias("e_maxx"), F.col("maxy").alias("e_maxy"),
-        "geometry_wkb",
+    refine = _ring_refine(
+        "event_id", _T_BOX, geom.boxes_intersect_polygon, ["tile_id", "event_id"],
+        wkb_col="geometry_wkb",
     )
-
-    joined = tcells.join(ecells.hint("shuffle_hash"), "cell")
-    # bbox overlap + report-once (the spatial_pairs_cell_join rule): a
-    # (tile, event) pair survives only in the cell containing the
-    # lower-left corner of its bbox intersection — exactly one cell per
-    # overlapping pair, so no distinct and no pair-keyed aggregate
-    ref_cell = _ref_cell_clamped(
-        F.greatest("t_minx", "e_minx"), F.greatest("t_miny", "e_miny"),
-        level, size,
-    )
-    cand = joined.filter(
-        (F.col("t_minx") <= F.col("e_maxx"))
-        & (F.col("t_maxx") >= F.col("e_minx"))
-        & (F.col("t_miny") <= F.col("e_maxy"))
-        & (F.col("t_maxy") >= F.col("e_miny"))
-        & (F.col("cell") == ref_cell)
-    )
-
-    id_type = events.schema["event_id"].dataType
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ring_cache: dict[str, np.ndarray | None] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            bx0 = pdf["t_minx"].to_numpy()
-            by0 = pdf["t_miny"].to_numpy()
-            bx1 = pdf["t_maxx"].to_numpy()
-            by1 = pdf["t_maxy"].to_numpy()
-            for eid, idx in pdf.groupby("event_id").indices.items():
-                if eid not in ring_cache:
-                    wkb = pdf["geometry_wkb"].iloc[idx[0]]
-                    ring_cache[eid] = (
-                        None if wkb is None else geom.wkb_to_polygon(bytes(wkb))
-                    )
-                ring = ring_cache[eid]
-                if ring is None:  # null footprint: bbox prefilter is exact
-                    keep[idx] = True
-                else:
-                    keep[idx] = geom.boxes_intersect_polygon(
-                        bx0[idx], by0[idx], bx1[idx], by1[idx], ring
-                    )
-            yield pdf.loc[keep, ["tile_id", "event_id"]]
-
-    out = cand.mapInPandas(refine, T.StructType(
-        [
-            T.StructField("tile_id", T.StringType()),
-            T.StructField("event_id", T.StringType()),
-        ]
-    ))
+    out = cand.mapInPandas(refine, "tile_id string, event_id string")
+    id_type = e.schema["event_id"].dataType
     return out.withColumn("event_id", F.col("event_id").cast(id_type))
 
 
@@ -937,6 +812,42 @@ def shuffle_limit(df: DataFrame, n: int | None, seed: int = 42) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _haversine_topk(lon, lat, qlon: float, qlat: float, k: int):
+    """(indices, haversine meters) of the k points nearest one query,
+    unordered — the map-side half of a top-k tree-reduce.  ``lon``/``lat``
+    are radians, the query is in degrees."""
+    qlo, qla = np.deg2rad(qlon), np.deg2rad(qlat)
+    h = (
+        np.sin((lat - qla) / 2) ** 2
+        + np.cos(lat) * np.cos(qla) * np.sin((lon - qlo) / 2) ** 2
+    )
+    d = 2 * 6371008.8 * np.arcsin(np.sqrt(h))
+    idx = np.argpartition(d, k)[:k] if len(d) > k else np.arange(len(d))
+    return idx, d[idx]
+
+
+def _global_topk(df: DataFrame, local_topk, id_type, k: int) -> DataFrame:
+    """Per-partition top-k rows (query_id, point_id, dist_m) from the
+    ``mapInPandas`` function ``local_topk``, then the global top-k per
+    query by a (dist_m, point_id)-ordered ``row_number`` window."""
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.StringType()),
+            T.StructField("point_id", id_type),
+            T.StructField("dist_m", T.DoubleType()),
+        ]
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist_m").asc(), F.col("point_id").asc()
+    )
+    return (
+        df.mapInPandas(local_topk, schema)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: list[tuple[str, float, float]],
@@ -953,16 +864,7 @@ def knn_join(
     For huge point sets a cell-ring prefilter bounds candidates — the
     partial top-k already avoids any full sort, so the refine stays cheap.
     """
-    spark = points.sparkSession
-    b = spark.sparkContext.broadcast(queries)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType()),
-            T.StructField("point_id", points.schema[id_col].dataType),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
-    )
+    b = points.sparkSession.sparkContext.broadcast(queries)
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qs = b.value
@@ -971,36 +873,16 @@ def knn_join(
             lat = np.deg2rad(pdf[lat_col].to_numpy(dtype=np.float64))
             ids = pdf[id_col].to_numpy()
             for qid, qlon, qlat in qs:
-                qlo, qla = np.deg2rad(qlon), np.deg2rad(qlat)
-                dlat = lat - qla
-                dlon = lon - qlo
-                h = (
-                    np.sin(dlat / 2) ** 2
-                    + np.cos(lat) * np.cos(qla) * np.sin(dlon / 2) ** 2
-                )
-                d = 2 * 6371008.8 * np.arcsin(np.sqrt(h))
-                if len(d) > k:
-                    idx = np.argpartition(d, k)[:k]
-                else:
-                    idx = np.arange(len(d))
-                yield pd.DataFrame(
-                    {"query_id": qid, "point_id": ids[idx], "dist_m": d[idx]}
-                )
+                idx, d = _haversine_topk(lon, lat, qlon, qlat, k)
+                yield pd.DataFrame({"query_id": qid, "point_id": ids[idx], "dist_m": d})
 
     # NOT spread: measured at sf1.0 the single-split haversine task (0.9s)
     # beats paying a 36 MB repartition first (1.4s) — the kernel is cheap
     # enough per row that the shuffle never amortizes; callers with truly
     # huge point sets arrive multi-split and parallelize naturally
-    local = points.select(id_col, lon_col, lat_col).mapInPandas(
-        local_topk, schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col("point_id").asc()
-    )
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    return _global_topk(
+        points.select(id_col, lon_col, lat_col), local_topk,
+        points.schema[id_col].dataType, k,
     )
 
 
@@ -1025,7 +907,7 @@ def _neighborhood_cell_counts(
     cond = F.lit(False)
     for _, qlon, qlat in queries:
         c0 = int(cells.cell_id(np.array([qlon]), np.array([qlat]), level)[0])
-        qx, qy = (c0 >> 29) & mask, c0 & mask
+        qx, qy = map(int, cells.cell_ixiy(c0))
         cond = cond | (
             ix.between(max(0, qx - max_rings), min(nmax, qx + max_rings))
             & iy.between(max(0, qy - max_rings), min(nmax, qy + max_rings))
@@ -1037,6 +919,18 @@ def _neighborhood_cell_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
+
+
+def _rings_to_k(layers, counts: dict[int, int], k: int) -> int:
+    """Index of the first ring of ``layers`` (cell-id arrays, innermost
+    first) by which the cumulative point count reaches ``k``; the number of
+    rings when it never does."""
+    have, ring = 0, -1
+    for ring, layer in enumerate(layers):
+        have += sum(counts.get(int(c), 0) for c in layer)
+        if have >= k:
+            return ring
+    return ring + 1
 
 
 def knn_join_cells(
@@ -1103,19 +997,17 @@ def knn_join_cells(
         F.col(lon_col).alias("lon"),
         F.col(lat_col).alias("lat"),
     ).withColumn("cell", cell_col)
+    qcell = {
+        qid: int(enc.cell_id(np.array([qlon]), np.array([qlat]), level)[0])
+        for qid, qlon, qlat in queries
+    }
 
     cand_rows = []
     if index == "s2":
         # batched BFS rings per query (driver-side, vectorized; ~33k cells
         # for 64 rings in ~0.2s) — the allowlist bounds the count agg the
         # way the flat index's ix/iy bit predicate does
-        rings_by_q = {
-            qid: s2.bfs_rings(
-                int(s2.cell_id(np.array([qlon]), np.array([qlat]), level)[0]),
-                max_rings,
-            )
-            for qid, qlon, qlat in queries
-        }
+        rings_by_q = {qid: s2.bfs_rings(c0, max_rings) for qid, c0 in qcell.items()}
         allowed = np.unique(
             np.concatenate([np.concatenate(r) for r in rings_by_q.values()])
         )
@@ -1129,28 +1021,16 @@ def knn_join_cells(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        for qid, _qlon, _qlat in queries:
+        for qid, _, _ in queries:
             layers = rings_by_q[qid]
-            have = 0
-            ring = 0
-            while ring < len(layers):
-                have += sum(counts.get(int(c), 0) for c in layers[ring])
-                if have >= k:
-                    break
-                ring += 1
+            ring = _rings_to_k(layers, counts, k)
             # k candidates within `ring` BFS layers -> k-th distance <=
             # (2*ring+1) * max_diag (a BFS step spans <= 2 cells); cover
             # that ball: king-radius ceil(dist/min_width)+1 layers suffice
             # (layers 0..r contain the full king-disk of radius r).  The
             # metric ratio is level-free; no 1/cos(lat) term for S2.
             r_ext = (
-                int(
-                    np.ceil(
-                        (2 * ring + 1)
-                        * s2.MAX_DIAG_DERIV
-                        / s2.MIN_WIDTH_DERIV
-                    )
-                )
+                int(np.ceil((2 * ring + 1) * s2.MAX_DIAG_DERIV / s2.MIN_WIDTH_DERIV))
                 + 1
             )
             if r_ext > len(layers) - 1:
@@ -1158,30 +1038,17 @@ def knn_join_cells(
                 # precomputed layers: extend the BFS on demand (ADVICE r6
                 # — truncating here silently broke the bit-identical
                 # guarantee vs knn_join)
-                layers = s2.bfs_rings(
-                    int(
-                        s2.cell_id(
-                            np.array([_qlon]), np.array([_qlat]), level
-                        )[0]
-                    ),
-                    r_ext,
-                )
+                layers = s2.bfs_rings(qcell[qid], r_ext)
             for rr in range(0, min(r_ext, len(layers) - 1) + 1):
                 for c in layers[rr]:
                     cand_rows.append({"query_id": qid, "cell": int(c)})
     else:
         counts = _neighborhood_cell_counts(pts, queries, level, max_rings)
         for qid, qlon, qlat in queries:
-            c0 = int(cells.cell_id(np.array([qlon]), np.array([qlat]), level)[0])
-            have = 0
-            ring = 0
-            while ring <= max_rings:
-                have += sum(
-                    counts.get(int(c), 0) for c in cells.ring_cells(c0, ring)
-                )
-                if have >= k:
-                    break
-                ring += 1
+            c0 = qcell[qid]
+            ring = _rings_to_k(
+                (cells.ring_cells(c0, r) for r in range(max_rings + 1)), counts, k
+            )
             # exactness bound: k candidates exist within Chebyshev ring r, so
             # the k-th haversine distance <= (r+1)*cell*sqrt(2) in lat-degrees;
             # a meter-ball of that radius spans 1/cos(lat) more cells in lon —
@@ -1200,47 +1067,20 @@ def knn_join_cells(
     filtered = pts.join(F.broadcast(cand), "cell").select(
         "query_id", "point_id", "lon", "lat"
     )
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType()),
-            T.StructField("point_id", points.schema[id_col].dataType),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
-    )
-    qmap = {q: (lon, lat) for q, lon, lat in queries}
-    bq = spark.sparkContext.broadcast(qmap)
+    bq = spark.sparkContext.broadcast({q: (lon, lat) for q, lon, lat in queries})
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qs = bq.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            lon = np.deg2rad(pdf["lon"].to_numpy(dtype=np.float64))
+            lat = np.deg2rad(pdf["lat"].to_numpy(dtype=np.float64))
+            ids = pdf["point_id"].to_numpy()
             for qid, idx in pdf.groupby("query_id").indices.items():
-                qlon, qlat = qs[qid]
-                lon = np.deg2rad(pdf["lon"].to_numpy(dtype=np.float64)[idx])
-                lat = np.deg2rad(pdf["lat"].to_numpy(dtype=np.float64)[idx])
-                qlo, qla = np.deg2rad(qlon), np.deg2rad(qlat)
-                h = (
-                    np.sin((lat - qla) / 2) ** 2
-                    + np.cos(lat) * np.cos(qla) * np.sin((lon - qlo) / 2) ** 2
-                )
-                d = 2 * 6371008.8 * np.arcsin(np.sqrt(h))
-                take = np.argpartition(d, min(k, len(d) - 1))[:k] if len(d) > k else np.arange(len(d))
+                take, d = _haversine_topk(lon[idx], lat[idx], *qs[qid], k)
                 yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "point_id": pdf["point_id"].to_numpy()[idx][take],
-                        "dist_m": d[take],
-                    }
+                    {"query_id": qid, "point_id": ids[idx][take], "dist_m": d}
                 )
 
-    local = filtered.mapInPandas(refine, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_m").asc(), F.col("point_id").asc()
-    )
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _global_topk(filtered, refine, points.schema[id_col].dataType, k)

@@ -120,18 +120,6 @@ def read_shp_parts(path: str | Path) -> list[Parts | None]:
     return records
 
 
-def read_shp_rings(path: str | Path) -> list[np.ndarray | None]:
-    """Compat: one exterior ring per record — the largest-|area| exterior
-    (None for Null shapes).  Full fidelity: :func:`read_shp_parts`."""
-    out: list[np.ndarray | None] = []
-    for parts in read_shp_parts(path):
-        if parts is None:
-            out.append(None)
-        else:
-            out.append(max((p[0] for p in parts), key=geom.ring_area))
-    return out
-
-
 def read_dbf(path: str | Path) -> pd.DataFrame:
     """Parse a .dbf attribute table (types C/N/F/L/D) into a DataFrame."""
     data = Path(path).read_bytes()

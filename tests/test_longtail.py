@@ -19,27 +19,56 @@ from geetiles_spark.sources import aoi_catalog, chips as chipsrc
 from geetiles_spark.sources.datasets import get_dataset_definition
 
 
+def _flood_events(spark):
+    """Event catalog with no ``geometry_wkb`` column: events are their bboxes."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [
+                # overlaps the whole aoi, inside the year
+                {"event_id": 1, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
+                 "maxy": 49.8, "start": "2020-03-01", "end": "2020-04-01"},
+                # spatially out
+                {"event_id": 2, "minx": 8.0, "miny": 50.6, "maxx": 8.2,
+                 "maxy": 50.8, "start": "2020-03-01", "end": "2020-04-01"},
+                # temporally out
+                {"event_id": 3, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
+                 "maxy": 49.8, "start": "2019-03-01", "end": "2020-04-01"},
+                # small footprint over one corner
+                {"event_id": 4, "minx": 6.086, "miny": 49.6865,
+                 "maxx": 6.09, "maxy": 49.69, "start": "2020-06-01",
+                 "end": "2020-06-05"},
+            ]
+        )
+    )
+
+
+def _mixed_null_events(spark):
+    """Mixed catalog: one triangle footprint, two NULL ``geometry_wkb``."""
+    tri = geom.ring_close(
+        np.array([[6.08, 49.68], [6.12, 49.68], [6.08, 49.72]])
+    )
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {"event_id": 1, "minx": 6.08, "miny": 49.68, "maxx": 6.12,
+                 "maxy": 49.72, "start": "2020-03-01", "end": "2020-04-01",
+                 "geometry_wkb": geom.polygon_to_wkb(tri)},
+                # null footprint, bbox covers the whole AOI
+                {"event_id": 2, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
+                 "maxy": 49.8, "start": "2020-03-01", "end": "2020-04-01",
+                 "geometry_wkb": None},
+                # temporally out AND null geometry: must not be collected
+                {"event_id": 3, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
+                 "maxy": 49.8, "start": "2019-03-01", "end": "2020-04-01",
+                 "geometry_wkb": None},
+            ]
+        )
+    )
+
+
 class TestIntervalSpatialJoin:
     def test_flood_style_join(self, spark, tiles_box):
-        events = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    # overlaps the whole aoi, inside the year
-                    {"event_id": 1, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
-                     "maxy": 49.8, "start": "2020-03-01", "end": "2020-04-01"},
-                    # spatially out
-                    {"event_id": 2, "minx": 8.0, "miny": 50.6, "maxx": 8.2,
-                     "maxy": 50.8, "start": "2020-03-01", "end": "2020-04-01"},
-                    # temporally out
-                    {"event_id": 3, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
-                     "maxy": 49.8, "start": "2019-03-01", "end": "2020-04-01"},
-                    # small footprint over one corner
-                    {"event_id": 4, "minx": 6.086, "miny": 49.6865,
-                     "maxx": 6.09, "maxy": 49.69, "start": "2020-06-01",
-                     "end": "2020-06-05"},
-                ]
-            )
-        )
+        events = _flood_events(spark)
         out = joins.interval_spatial_join(
             tiles_box, events, "2020-01-01", "2020-12-31"
         )
@@ -54,28 +83,7 @@ class TestIntervalSpatialJoin:
         and others have geometry_wkb NULL — null footprints refine by bbox
         (no TypeError on the driver), and out-of-window geometries stay out
         of the broadcast."""
-        from geetiles_spark.geo import geom
-
-        tri = geom.ring_close(
-            np.array([[6.08, 49.68], [6.12, 49.68], [6.08, 49.72]])
-        )
-        events = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    {"event_id": 1, "minx": 6.08, "miny": 49.68, "maxx": 6.12,
-                     "maxy": 49.72, "start": "2020-03-01", "end": "2020-04-01",
-                     "geometry_wkb": geom.polygon_to_wkb(tri)},
-                    # null footprint, bbox covers the whole AOI
-                    {"event_id": 2, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
-                     "maxy": 49.8, "start": "2020-03-01", "end": "2020-04-01",
-                     "geometry_wkb": None},
-                    # temporally out AND null geometry: must not be collected
-                    {"event_id": 3, "minx": 6.0, "miny": 49.6, "maxx": 6.2,
-                     "maxy": 49.8, "start": "2019-03-01", "end": "2020-04-01",
-                     "geometry_wkb": None},
-                ]
-            )
-        )
+        events = _mixed_null_events(spark)
         pdf = joins.interval_spatial_join(
             tiles_box, events, "2020-01-01", "2020-12-31"
         ).toPandas()
@@ -84,6 +92,23 @@ class TestIntervalSpatialJoin:
         assert (pdf["event_id"] == 2).sum() == n_tiles  # bbox-exact
         # the triangle footprint excludes tiles in the bbox's lower-right
         assert 0 < (pdf["event_id"] == 1).sum() < n_tiles
+
+    @pytest.mark.parametrize("catalog", [_flood_events, _mixed_null_events])
+    def test_cell_path_matches_broadcast(self, spark, tiles_box, catalog):
+        """The cell path agrees with the broadcast path on a catalog without
+        a footprint column and on one with null footprints."""
+        events = catalog(spark)
+        got = {}
+        for broadcast in (True, False):
+            got[broadcast] = {
+                (r["tile_id"], r["event_id"])
+                for r in joins.interval_spatial_join(
+                    tiles_box, events, "2020-01-01", "2020-12-31",
+                    broadcast_events=broadcast,
+                ).collect()
+            }
+        assert got[True] == got[False]
+        assert len(got[True]) > tiles_box.count()
 
 
 class TestGroupFilter:

@@ -86,3 +86,57 @@ class TestPlanShapes:
             plan = _plan(spark, name)
             assert "LeftAnti" not in plan, f"{name} kept the hot-split anti join"
             assert "LeftSemi" not in plan, f"{name} kept the hot-split semi join"
+
+
+class TestSpatialJoinRefineNodes:
+    """The exact refine of the cell joins, pip and kNN runs as a Python map
+    named ``refine``: plans and per-node counters (rows in and out of
+    ``MapInPandas refine(...)``) find it by that name, so a renamed closure
+    would silently zero the counted candidates and keep ratios."""
+
+    @staticmethod
+    def _executed_plan(df):
+        from geetiles_spark import cache
+
+        with cache.persist_scope():
+            df.collect()
+            return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_cell_joins_broadcast_on_cell_and_refine(self, spark, tiles_box, foreign_box):
+        import re
+
+        from geetiles_spark.operators import joins
+
+        for df in (
+            joins.intersect_join_cells(tiles_box, foreign_box),
+            joins.foreign_proportions_cells(tiles_box, foreign_box),
+        ):
+            plan = self._executed_plan(df)
+            assert "MapInPandas refine(" in plan
+            assert re.search(r"BroadcastHashJoin \[cell#\d+L?\], \[cell#\d+L?\]", plan)
+
+    def test_pip_and_knn_refine(self, spark, tiles_box):
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        from geetiles_spark.geo import geom
+        from geetiles_spark.operators import joins
+
+        pts = tiles_box.select(
+            F.col("tile_id").alias("id"),
+            ((F.col("minx") + F.col("maxx")) / 2).alias("lon"),
+            ((F.col("miny") + F.col("maxy")) / 2).alias("lat"),
+        )
+        # a triangle: not its bbox, so pip takes the Python refine path
+        tri = geom.ring_close(np.array([[6.08, 49.68], [6.12, 49.68], [6.08, 49.72]]))
+        polys = spark.createDataFrame(
+            pd.DataFrame(
+                [{"tile_id": "T", "geometry_wkb": geom.polygon_to_wkb(tri),
+                  "minx": 6.08, "miny": 49.68, "maxx": 6.12, "maxy": 49.72}]
+            )
+        )
+        pip = joins.point_in_polygon_join(pts, polys, id_col="id")
+        knn = joins.knn_join_cells(pts, [("q0", 6.10, 49.70)], k=5)
+        for df in (pip, knn):
+            assert "MapInPandas refine(" in self._executed_plan(df)

@@ -384,13 +384,13 @@ def test_ref_cell_clamped_at_antimeridian_and_pole(spark):
     import pandas as pd
 
     level = 4
-    size = cells.cell_size_deg(level)
     nmax = (1 << level) - 1
     df = spark.createDataFrame(
         pd.DataFrame({"x": [180.0, -180.0, 0.0], "y": [90.0, -90.0, 0.0]})
     )
+    # the report-once reference cell: the clamped cell id of a Column pair
     got = df.select(
-        joins._ref_cell_clamped(F.col("x"), F.col("y"), level, size).alias("c")
+        joins.point_cell_expr(F.col("x"), F.col("y"), level).alias("c")
     ).toPandas()["c"]
     for c, (x, y) in zip(got, [(180.0, 90.0), (-180.0, -90.0), (0.0, 0.0)]):
         ix = (int(c) >> 29) & ((1 << 29) - 1)
